@@ -17,7 +17,7 @@ from typing import Hashable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from liken_spark.constants import CANONICAL_ID, ROW_ID
-from liken_spark.ids import init_canonical, with_row_id
+from liken_spark.ids import _with_row_id_and_count, init_canonical, with_row_id
 from liken_spark.operators.base import BucketDeduper, PairsDeduper
 from liken_spark.operators.dedupers import exact
 from liken_spark.operators.executor import (
@@ -94,9 +94,9 @@ class Dedupe:
             self._collection.apply(exact())
         steps = self._collection.compile(columns)
 
-        full = with_row_id(self._df, materialize=not self._deterministic_source)
-        # captured before init_canonical wraps the frame (advisory attr)
-        n_input_rows = getattr(full, "_liken_row_count", None)
+        full, n_input_rows = _with_row_id_and_count(
+            self._df, materialize=not self._deterministic_source
+        )
         full = init_canonical(full, id)
 
         # Single bucket-deduper fast path: rewrite the canonical id on the

@@ -93,10 +93,11 @@ _LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 
 def lang_id(col: Column) -> Column:
-    """Stopword-marker vote across 5 languages; 'und' (undetermined) when no
-    marker hits. Arrow-batched; one inverted marker->languages probe per
-    token instead of five per-language set scans (same vote and the same
-    first-language strict-greater tie-break, so output is identical)."""
+    """Stopword-marker vote across the ``_LANG_MARKERS`` languages; 'und'
+    (undetermined) when no marker hits. Arrow-batched; one inverted
+    marker->languages probe per token instead of one set scan per language
+    (same vote and the same first-language strict-greater tie-break, so
+    output is identical)."""
 
     langs = list(_LANG_MARKERS)
     tok2langs: dict[str, tuple[int, ...]] = {}
@@ -112,7 +113,7 @@ def lang_id(col: Column) -> Column:
             if not text:
                 out.append("und")
                 continue
-            counts = [0, 0, 0, 0, 0]
+            counts = [0] * len(langs)
             for t in text.lower().split():
                 hit = get(t)
                 if hit:

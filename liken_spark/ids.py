@@ -53,17 +53,29 @@ def with_row_id(df: DataFrame, col_name: str = ROW_ID, materialize: bool = True)
     zipWithIndex notion (backends/pyspark/wrapper.py:121). At 10^12-row
     scale prefer a source key via ``id=`` (SURVEY.md §7.3).
     """
+    return _with_row_id_and_count(df, col_name, materialize)[0]
+
+
+def _with_row_id_and_count(
+    df: DataFrame, col_name: str = ROW_ID, materialize: bool = True
+) -> tuple[DataFrame, int | None]:
+    """``with_row_id`` plus the total row count its per-partition count
+    pass already learned (None when ``col_name`` was already present), so
+    callers such as the canonicalize broadcast gate skip a counting job."""
     if col_name in df.columns:
-        return df
+        return df, None
 
     base = df.withColumn(_MID, F.monotonically_increasing_id()).withColumn(
         _PID, F.spark_partition_id()
     )
-    # an input that is itself persisted already freezes its partition
-    # layout (cache blocks are written once; mid/pid are pure functions of
-    # the cached partitions), so a second cache on top would only re-store
-    # the same rows — skip it and let the count below ride the input cache.
-    if materialize and not df.is_cached:
+    # an input persisted WITH disk already freezes its partition layout
+    # (its blocks are written once and never recomputed; mid/pid are pure
+    # functions of the cached partitions), so a second cache on top would
+    # only re-store the same rows — skip it and let the count below ride
+    # the input cache. A memory-only cache does not freeze anything: an
+    # evicted block is recomputed from lineage, and a nondeterministic
+    # source then yields different rows under the same ids.
+    if materialize and not df.storageLevel.useDisk:
         base = base.persist(StorageLevel.MEMORY_AND_DISK)
     counts = base.groupBy(_PID).count().collect()
 
@@ -87,12 +99,7 @@ def with_row_id(df: DataFrame, col_name: str = ROW_ID, materialize: bool = True)
         out = base.join(F.broadcast(omap), _PID).withColumn(
             col_name, (F.col(TMP_PREFIX + "off") + local_pos).cast(LongType())
         ).drop(TMP_PREFIX + "off")
-    out = out.drop(_MID, _PID)
-    # the per-partition count pass already learned the total row count —
-    # stash it so callers (e.g. the canonicalize broadcast gate) can skip
-    # a dedicated counting job. Advisory: does not survive transformations.
-    out._liken_row_count = acc
-    return out
+    return out.drop(_MID, _PID), acc
 
 
 def init_canonical(df: DataFrame, id: str | None) -> DataFrame:

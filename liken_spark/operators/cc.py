@@ -19,23 +19,22 @@ Physical notes:
   to coalesce below defaultParallelism). SINGLE-THREADED-SESSION
   ASSUMPTION, documented at the mutation site.
 - Convergence is detected by an order-independent edge-set signature
-  (count + bit_xor of edge hashes), computed at rounds 1 and 2 and then
-  every ``check_every``-th round — the first round runs "blind" because
-  dedup pair graphs are near-star already (exact/LSH emit star pairs) and
-  almost never converge in 0 rounds; later checks are thinned because each
-  one is a driver barrier (see ``connected_components``).
-- AQE stays ON for the loop (LIKEN_SPARK_CC_AQE=0 disables it as an
-  experiment): the star-round joins read stats-less checkpointed frames,
-  so only AQE's runtime re-planning gets them broadcast joins + coalesced
-  partitions — statically planned they sort-merge-join (measured 2x worse
-  end-to-end at 20k clips despite saving the per-stage submission gaps).
+  (count + bit_xor of edge hashes), computed after every round but the
+  first — the first round runs "blind" because dedup pair graphs are
+  near-star already (exact/LSH emit star pairs) and almost never converge
+  in 0 rounds.
+- AQE stays ON for the loop: the star-round joins read stats-less
+  checkpointed frames, so only AQE's runtime re-planning gets them
+  broadcast joins + coalesced partitions — statically planned they
+  sort-merge-join (measured 2x worse end-to-end at 20k clips despite
+  saving the per-stage submission gaps).
 - Each round's frame is localCheckpoint'ed (plan growth across rounds is
   exponential otherwise — the star operators reference the edge frame
-  several times). By default rounds checkpoint NON-eagerly and the
-  per-round signature job doubles as the materializer (one job per round
-  instead of two; measured faster on 240k-edge graphs); earlier rounds'
-  checkpoints are unpersisted as soon as a later round has materialized,
-  so at most two rounds of edge blocks are ever held.
+  several times). Rounds checkpoint NON-eagerly and the per-round
+  signature job doubles as the materializer (one job per round instead of
+  two; measured faster on 240k-edge graphs); earlier rounds' checkpoints
+  are unpersisted as soon as a later round has materialized, so at most
+  two rounds of edge blocks are ever held.
 """
 
 from __future__ import annotations
@@ -96,20 +95,17 @@ def materialize_concurrently(dfs: list[DataFrame]) -> None:
     """Pin a batch of independent persisted frames with concurrent count
     jobs (Spark job submission is thread-safe; each frame's count is its
     only consumer at this point, so first-writer-wins caching is safe)."""
-    materialize_concurrently_counting(dfs)
+    run_concurrently([d.count for d in dfs])
 
 
-def materialize_concurrently_counting(dfs: list[DataFrame]) -> list[int]:
-    """``materialize_concurrently`` that also returns each frame's row
-    count, so callers can fuse a cardinality probe (e.g. a broadcast-gate
-    count) into the same concurrent pin batch instead of paying a separate
-    serial job for it."""
-    if not dfs:
-        return []
-    if len(dfs) == 1:
-        return [dfs[0].count()]
-    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-        return list(ex.map(lambda f: f.count(), dfs))
+def run_concurrently(actions: list) -> list:
+    """Run independent driver actions (zero-argument callables, e.g. a
+    pin's ``count`` or a broadcast-gate stats collect) as concurrent Spark
+    jobs; results in input order."""
+    if len(actions) <= 1:
+        return [a() for a in actions]
+    with ThreadPoolExecutor(max_workers=len(actions)) as ex:
+        return [f.result() for f in [ex.submit(a) for a in actions]]
 
 
 def scoped_persist_count(df: DataFrame) -> tuple[DataFrame, int]:
@@ -233,8 +229,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 40,
-    eager_rounds: bool = False,
-    check_every: int | None = None,
     local_max_edges: int | None = None,
 ) -> DataFrame:
     """(src, dst) pair DataFrame -> (node, comp) assignment DataFrame.
@@ -243,19 +237,6 @@ def connected_components(
     appear in at least one pair are returned — callers default absent rows
     to their own id (matching the reference's ``rep_index.get(i, i)``
     fallback, deduper.py:149).
-
-    ``check_every`` thins the convergence barriers: rounds 1 and 2 are
-    always checked; after that the signature collect runs only every
-    ``check_every``-th round. Skipped-round equality is still a sound
-    convergence proof (the star operators strictly decrease a potential
-    function until the fixed point, Kiveris et al. §3, so an edge set equal
-    to the one ``check_every`` rounds earlier can only be the fixed point).
-    Default 1 — i.e. check every round: the thinning was implemented,
-    measured, and REJECTED as a default (PLANS.md): a signature collect is
-    one stage over an already-materialized frame while each star round it
-    risks adding is ~7 shuffle stages; at 20k clips/local[32] check_every=2
-    cost a reproducible ~1 s (warm 18.5-18.8 vs 17.4-17.6 s). Env
-    ``LIKEN_SPARK_CC_CHECK_EVERY`` overrides for scaling experiments.
 
     ``local_max_edges`` is the adaptive small-graph gate (same philosophy
     as AQE's broadcast threshold): when the normalized edge count — known
@@ -275,19 +256,23 @@ def connected_components(
     checkpoint workarounds the loop output needs. Default 2_000_000
     (env ``LIKEN_SPARK_CC_LOCAL_MAX``); 0 forces the distributed loop.
     """
+    return _components(pairs, src, dst, max_iter, local_max_edges)[0]
+
+
+def _components(
+    pairs: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    max_iter: int = 40,
+    local_max_edges: int | None = None,
+) -> tuple[DataFrame, bool]:
+    """``connected_components`` plus whether the driver fast path built the
+    result (a LocalRelation, cheap to probe twice — keep="first"
+    canonicalization then uses the filter-based representative lookup,
+    see ``executor._apply_comp_df``)."""
     import os as _os
+
     spark = pairs.sparkSession
-    if check_every is None:
-        check_every = int(_os.environ.get("LIKEN_SPARK_CC_CHECK_EVERY", "1"))
-    check_every = max(1, check_every)
-    # LIKEN_SPARK_CC_AQE=0 statically plans the loop's queries (AQE off) —
-    # an experiment knob for the scaling protocol, NOT the default:
-    # measured at 20k clips / local[32], AQE-off DOUBLES the audio
-    # pipeline (39-46 s warm vs ~18.5 s) because the star-round joins
-    # against stats-less checkpointed frames lose AQE's broadcast-join
-    # conversion and partition coalescing; the per-stage submission gaps
-    # AQE adds are far cheaper than the sort-merge joins it removes.
-    disable_aqe = _os.environ.get("LIKEN_SPARK_CC_AQE", "1") == "0"
     owned = _take_scoped_persists()
     e = _normalize(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     e = e.persist()
@@ -303,12 +288,11 @@ def connected_components(
     # this SparkSession would observe the edge-sized value. The rest of the
     # engine shares this assumption (scoped persists, checkpoint manifests).
     session_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    session_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     live: list[DataFrame] = []  # round checkpoints not yet released
     try:
         sig = _signature(e)
         if sig[0] == 0:
-            return spark.createDataFrame([], "node long, comp long")
+            return spark.createDataFrame([], "node long, comp long"), False
         if local_max_edges is None:
             local_max_edges = int(_os.environ.get("LIKEN_SPARK_CC_LOCAL_MAX", "2000000"))
         if sig[0] <= local_max_edges:
@@ -322,51 +306,36 @@ def connected_components(
             out_pdf = pd.DataFrame(
                 {"node": list(assign.keys()), "comp": list(assign.values())}
             ).astype("int64")
-            out = spark.createDataFrame(out_pdf, "node long, comp long")
-            # advisory tag: a LocalRelation assignment is cheap to probe
-            # twice, so keep="first" canonicalization can use the
-            # filter-based representative lookup (executor._apply_comp_df)
-            out._liken_local_cc = True
-            return out
+            return spark.createDataFrame(out_pdf, "node long, comp long"), True
         # floor at the session's core count: fewer partitions than cores
         # would idle executors for the whole loop; edge-count sizing still
         # caps the per-stage scheduling overhead on small graphs
         cores = spark.sparkContext.defaultParallelism
         cc_parts = max(4, cores, min(2048, sig[0] // 1_000_000 + 4))
         spark.conf.set("spark.sql.shuffle.partitions", str(cc_parts))
-        if disable_aqe:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
         # NB: each round MUST truncate the plan (localCheckpoint) — the star
         # operators reference the edge frame several times, so an
         # un-truncated logical plan grows exponentially per round. Rounds
-        # are checkpointed eagerly; the convergence signature doubles as
+        # are checkpointed lazily; the convergence signature doubles as
         # the materializing job. Dedup pair graphs are near-star already
         # (exact/LSH emit star pairs), so the first round runs "blind" —
         # checks start at round 2.
         prev = e
         for i in range(max_iter):
-            e_next = _small_star(_large_star(prev)).localCheckpoint(eager=eager_rounds)
-            live.append(e_next)
-            # rounds 1 and 2 always checked, then every check_every-th
-            # round — each skipped check is one driver barrier saved; see
-            # the docstring for why skipped-round equality stays sound
-            check = i in (1, 2) or (i > 2 and (i - 2) % check_every == 0)
-            sig_next = _signature(e_next) if check else None
-            # Once e_next is materialized (eagerly, or by the signature job
-            # just run), every earlier round's checkpoint blocks are dead —
-            # release them so at most two rounds of edge blocks are ever
-            # held. With eager_rounds=False and no signature yet, earlier
-            # rounds must survive: their lineage is truncated, so
-            # unpersisting before a downstream materialization loses data.
-            if eager_rounds or sig_next is not None:
-                for k in live[:-1]:
-                    k.unpersist()
-                del live[:-1]
-            prev = e_next
-            if sig_next is not None and sig_next == sig:
+            prev = _small_star(_large_star(prev)).localCheckpoint(eager=False)
+            live.append(prev)
+            if i == 0:
+                continue  # blind round: nothing materialized, nothing to release
+            sig_next = _signature(prev)
+            # the signature job just materialized this round, so every
+            # earlier round's checkpoint blocks are dead — release them so
+            # at most two rounds of edge blocks are ever held
+            for k in live[:-1]:
+                k.unpersist()
+            del live[:-1]
+            if sig_next == sig:
                 break
-            if sig_next is not None:
-                sig = sig_next
+            sig = sig_next
         else:  # pragma: no cover - defensive
             raise RuntimeError(f"connected components did not converge in {max_iter} rounds")
         e_final = prev
@@ -376,14 +345,13 @@ def connected_components(
         # eager localCheckpoint: `out` is fully materialized before the
         # finally block releases the frames it was computed from
         out = children.union(roots).distinct().localCheckpoint(eager=True)
-        return out
+        return out, False
     finally:
         # release EVERYTHING in finally (not just on the success path): an
         # exception mid-loop (or the max_iter RuntimeError) must not leak
         # the edge frame, round checkpoints, or owned scoped persists for
         # the session lifetime.
         spark.conf.set("spark.sql.shuffle.partitions", session_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", session_aqe)
         e.unpersist()
         for k in live:
             k.unpersist()

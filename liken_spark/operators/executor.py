@@ -37,7 +37,7 @@ from liken_spark.operators.base import (
     PairsDeduper,
     PredicateSpec,
 )
-from liken_spark.operators.cc import connected_components
+from liken_spark.operators.cc import _components
 from liken_spark.preprocess import Preprocessor
 
 COMP = TMP_PREFIX + "comp"
@@ -85,18 +85,21 @@ def _rewrite_over_partition(df: DataFrame, part_cols: list[Column], keep: str) -
     return out
 
 
-def _apply_comp_df(df: DataFrame, comp_df: DataFrame, keep: str) -> DataFrame:
+def _apply_comp_df(
+    df: DataFrame, comp_df: DataFrame, keep: str, local_cc: bool = False
+) -> DataFrame:
     """Join a partial (ROW_ID, comp) assignment; absent rows stay singleton
-    (reference ``rep_index.get(i, i)``, deduper.py:149)."""
+    (reference ``rep_index.get(i, i)``, deduper.py:149). ``local_cc``: the
+    assignment came from the CC driver fast path (``cc._components``)."""
     d = df.join(comp_df.withColumnRenamed("node", ROW_ID), ROW_ID, "left")
     d = d.withColumn(COMP, F.coalesce(F.col("comp"), F.col(ROW_ID))).drop("comp")
-    if keep == "first" and getattr(comp_df, "_liken_local_cc", False):
+    if keep == "first" and local_cc:
         # comp is BY CONTRACT the minimum ROW_ID of its component
         # (connected_components docstring), so with keep="first" the
         # representative row is exactly the row whose ROW_ID equals its
         # comp — a filter, not a min_by aggregation: one exchange less in
         # every canonicalize tail. Gated on the CC fast path's
-        # LocalRelation tag: the reps branch re-probes the comps join, and
+        # LocalRelation output: the reps branch re-probes the comps join, and
         # only a broadcast-sized comps makes that re-probe free (the
         # distributed loop's stats-less checkpoint output keeps the
         # aggregate form).
@@ -116,10 +119,11 @@ def _apply_comp_df(df: DataFrame, comp_df: DataFrame, keep: str) -> DataFrame:
 
 def components_for(
     unit: Unit, scope: DataFrame
-) -> DataFrame:
+) -> tuple[DataFrame, bool]:
     """(node, comp) assignment for rows in ``scope`` (comp = min ROW_ID of
-    the component within the scope). Used on the generic path; bucket
-    dedupers on full scope take the windowed fast path instead."""
+    the component within the scope), and whether the CC driver fast path
+    built it. Used on the generic path; bucket dedupers on full scope take
+    the windowed fast path instead."""
     spec, columns, preps = unit.spec, unit.columns, unit.preprocessors
     spec.validate(columns)
     if isinstance(spec, BucketDeduper):
@@ -131,17 +135,17 @@ def components_for(
         return (
             d.join(roots, d[kname].eqNullSafe(roots[kname + "_r"]))
             .select(F.col(ROW_ID).alias("node"), F.col("comp"))
-        )
+        ), False
     if isinstance(spec, PredicateSpec):
         mask = F.coalesce(spec.mask_column(scope, columns, preps), F.lit(False))
         matched = scope.where(mask).select(ROW_ID)
         stats = matched.agg(F.min(ROW_ID).alias("mn"))
         return matched.crossJoin(F.broadcast(stats)).select(
             F.col(ROW_ID).alias("node"), F.col("mn").alias("comp")
-        )
+        ), False
     assert isinstance(spec, PairsDeduper)
     pairs = spec.gen_pairs(scope, columns, preps)
-    return connected_components(pairs)
+    return _components(pairs)
 
 
 def apply_unit(df: DataFrame, unit: Unit, keep: str) -> DataFrame:
@@ -152,8 +156,8 @@ def apply_unit(df: DataFrame, unit: Unit, keep: str) -> DataFrame:
         # fast path: single shuffle, no joins
         key = spec.key_column(df, unit.columns, unit.preprocessors)
         return _rewrite_over_partition(df, [key], keep)
-    comp_df = components_for(unit, df)
-    return _apply_comp_df(df, comp_df, keep)
+    comp_df, local_cc = components_for(unit, df)
+    return _apply_comp_df(df, comp_df, keep, local_cc)
 
 
 def apply_and_step(df: DataFrame, units: list[Unit], keep: str) -> DataFrame:
@@ -180,7 +184,7 @@ def apply_and_step(df: DataFrame, units: list[Unit], keep: str) -> DataFrame:
                 reps, F.col(kname).eqNullSafe(F.col(kname + "_r"))
             ).drop(kname, kname + "_r")
         else:
-            comp_df = components_for(unit, d).withColumnRenamed("node", ROW_ID)
+            comp_df = components_for(unit, d)[0].withColumnRenamed("node", ROW_ID)
             comp_df = comp_df.withColumnRenamed("comp", name)
             d = d.join(comp_df, ROW_ID, "left").withColumn(
                 name, F.coalesce(F.col(name), F.col(ROW_ID))
@@ -202,6 +206,7 @@ def apply_predicated_step(df: DataFrame, units: list[Unit], keep: str) -> DataFr
 
     last = len(units) - 1
     final_comp: DataFrame | None = None
+    local_cc = False
     for k, unit in enumerate(units):
         spec = unit.spec
         spec.validate(unit.columns)
@@ -221,13 +226,13 @@ def apply_predicated_step(df: DataFrame, units: list[Unit], keep: str) -> DataFr
             if cnt > 1:
                 indices = matched if indices is None else indices.union(matched).distinct()
         elif k == last:
-            final_comp = components_for(unit, scope)
+            final_comp, local_cc = components_for(unit, scope)
         # non-final threshold dedupers inside a predicated step cannot
         # influence the outcome (only the last deduper's components are
         # canonicalized, executor.py:135) — the reference still runs them;
         # we skip the dead work.
     assert final_comp is not None
-    return _apply_comp_df(df, final_comp, keep)
+    return _apply_comp_df(df, final_comp, keep, local_cc)
 
 
 def run_steps(df: DataFrame, steps: list[list[Unit]], keep: str) -> DataFrame:

@@ -30,7 +30,7 @@ def main(cpus: int, input_dir: str) -> None:
     import liken_spark as lk
     from liken_spark.constants import ROW_ID
     from liken_spark.ids import with_row_id
-    from liken_spark.operators.cc import connected_components
+    from liken_spark.operators.cc import _components
     from liken_spark.operators.dedupers import LshSpec
     from liken_spark.operators.executor import _apply_comp_df
     from liken_spark.operators.textdedup import SubstringSpec
@@ -98,7 +98,7 @@ def main(cpus: int, input_dir: str) -> None:
 
     with timed("cc"):
         pairs = exact_pairs.union(lsh_pairs).union(sub_pairs)
-        comps = connected_components(pairs)
+        comps, local_cc = _components(pairs)
 
     with timed("canonical_join_write"):
         from liken_spark.constants import CANONICAL_ID
@@ -106,7 +106,8 @@ def main(cpus: int, input_dir: str) -> None:
         ids = base.select(ROW_ID, F.col("clip_id")).withColumn(
             CANONICAL_ID, F.col("clip_id")
         )
-        canon_map = _apply_comp_df(ids, comps, keep="first").select(ROW_ID, CANONICAL_ID)
+        canon_map = _apply_comp_df(ids, comps, keep="first", local_cc=local_cc)
+        canon_map = canon_map.select(ROW_ID, CANONICAL_ID)
         canon_map = F.broadcast(canon_map.localCheckpoint(eager=True))
         base.join(canon_map, ROW_ID).drop(ROW_ID).write.format("noop").mode(
             "overwrite"

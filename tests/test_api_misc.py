@@ -144,3 +144,44 @@ def test_wratio_long_branch_pins_06_scale():
 
 def test_wratio_empty_is_zero():
     assert _wratio("", "abc") == 0.0
+
+
+def test_with_row_id_freezes_memory_only_cached_source(spark):
+    """A MEMORY_ONLY cache does not freeze a nondeterministic source (an
+    evicted block is recomputed from lineage), so with_row_id must still
+    take its own memory-and-disk persist: row ids keep naming the same
+    rows after the input cache is gone (unpersist stands in for eviction)."""
+    import random
+
+    from pyspark.sql import functions as F
+    from pyspark.storagelevel import StorageLevel
+
+    from liken_spark.constants import ROW_ID
+    from liken_spark.ids import with_row_id
+
+    draw = F.udf(lambda: random.random(), "double").asNondeterministic()
+    src = spark.range(200, numPartitions=4).withColumn("r", draw())
+    src = src.persist(StorageLevel.MEMORY_ONLY)
+    src.count()
+    try:
+        out = with_row_id(src)
+        first = {r[ROW_ID]: r["r"] for r in out.collect()}
+        src.unpersist()
+        second = {r[ROW_ID]: r["r"] for r in out.collect()}
+        assert first == second and len(first) == 200
+    finally:
+        src.unpersist()
+
+
+def test_lang_id_sizes_votes_to_marker_table(spark, monkeypatch):
+    """lang_id votes over however many languages _LANG_MARKERS holds."""
+    from pyspark.sql import functions as F
+
+    from liken_spark.functions import text
+
+    monkeypatch.setitem(text._LANG_MARKERS, "nl", ("het", "een", "niet", "ook"))
+    df = spark.createDataFrame(
+        [("het is niet een boek ook",), ("the cat and the dog",), ("",)], "t string"
+    )
+    got = [r["l"] for r in df.select(text.lang_id(F.col("t")).alias("l")).collect()]
+    assert got == ["nl", "en", "und"]

@@ -43,6 +43,20 @@ def test_checkpoint_resume(spark, clips, tmp_path):
             fields = [fld["name"] for fld in json.load(f)["schema"]["fields"]]
         assert "bytes" not in fields, f"payload leaked into checkpoint {stage}"
 
+    # the fused manifest job's checksum equals a direct bit_xor(xxhash64)
+    # over the stage's parquet, and its row count the parquet's row count
+    from pyspark.sql import functions as F
+
+    for stage in os.listdir(os.path.join(base, "run1")):
+        with open(os.path.join(base, "run1", stage, "_liken_manifest.json")) as f:
+            checksum = json.load(f)["checksum"]
+        data = spark.read.parquet(os.path.join(base, "run1", stage, "data"))
+        direct = data.agg(
+            F.count(F.lit(1)).alias("c"),
+            F.coalesce(F.bit_xor(F.xxhash64(*data.columns)), F.lit(0)).alias("h"),
+        ).collect()[0]
+        assert checksum == [direct["c"], direct["h"]], stage
+
     # simulate a kill after stage 03: delete the last two stage checkpoints
     import shutil
 

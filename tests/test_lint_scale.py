@@ -4,7 +4,10 @@
   via ``.to_numpy()`` column access — iterrows materializes a Series per
   row and is the classic 10-100x pandas-UDF slowdown);
 - no ``collect()`` loops in operator hot paths other than the documented
-  driver-side aggregates (row-id offsets, CC convergence signature).
+  driver-side aggregates (row-id offsets, CC convergence signature);
+- no environment knob outside a short allowlist, and no state smuggled
+  on ``_liken_*`` DataFrame attributes (any transform drops them and
+  Spark Connect does not support them — pass return values instead).
 """
 
 from __future__ import annotations
@@ -73,3 +76,43 @@ def test_windows_only_per_row_bounded():
         "non-allowlisted Window.partitionBy in engine source (hot-key "
         f"single-task risk — use groupBy+min_by/max_by+join): {offenders}"
     )
+
+
+# The only LIKEN_SPARK_* environment settings the engine may read: the CC
+# driver fast-path gate, the session warm-up switch and the driver memory.
+# A/B knobs for measured-and-rejected paths stay out of the library.
+_ENV_ALLOWLIST = {"LIKEN_SPARK_CC_LOCAL_MAX", "LIKEN_SPARK_WARMUP", "LIKEN_SPARK_DRIVER_MEM"}
+
+
+def test_env_knobs_allowlisted():
+    import re
+
+    offenders = [
+        f"{p.relative_to(SRC)}:{i} {name}"
+        for p in _sources()
+        for i, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
+        for name in re.findall(r"LIKEN_SPARK_[A-Z0-9_]+", line)
+        if name not in _ENV_ALLOWLIST
+    ]
+    assert offenders == [], f"non-allowlisted LIKEN_SPARK_* setting in engine source: {offenders}"
+
+
+# ``sc._liken_warmed`` memoizes the once-per-SparkContext warm-up on the
+# context (session.py) — not a DataFrame, so not the hazard checked here.
+_ATTR_ALLOWLIST = {"_liken_warmed"}
+
+
+def test_no_hidden_dataframe_attributes():
+    import re
+
+    attr = re.compile(
+        r"\.(_liken_\w+)|(?:get|set|has|del)attr\([^,]+,\s*[\"'](_liken_\w+)[\"']"
+    )
+    offenders = [
+        f"{p.relative_to(SRC)}:{i} {a or b}"
+        for p in _sources()
+        for i, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
+        for a, b in attr.findall(line)
+        if (a or b) not in _ATTR_ALLOWLIST
+    ]
+    assert offenders == [], f"_liken_* attribute set or read in engine source: {offenders}"

@@ -1,14 +1,11 @@
-"""Round-3 regressions: prefilter candidate semantics, CC round modes,
-sidecar-oracle plumbing."""
+"""Round-3 regressions: prefilter candidate semantics, sidecar-oracle
+plumbing."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 import liken_spark as lk
 from liken_spark.constants import ROW_ID
 from liken_spark.ids import with_row_id
-from liken_spark.operators.cc import connected_components
 
 
 def test_lsh_candidate_pairs_are_intra_bucket(spark):
@@ -46,22 +43,6 @@ def test_lsh_candidate_pairs_big_bucket_falls_back_to_star(spark):
     finally:
         del spec.PAIR_BUCKET_CAP  # restore class attribute lookup
     assert got == {(0, i) for i in range(1, n)}  # n-1 star edges, root 0
-
-
-def test_cc_eager_and_noneager_rounds_agree(spark):
-    e1 = spark.range(2_000).select(
-        (F.col("id") * 3).alias("src"), (F.col("id") * 3 + 1).alias("dst")
-    )
-    e2 = spark.range(2_000).select(
-        (F.col("id") * 3 + 1).alias("src"), (F.col("id") * 3 + 2).alias("dst")
-    )
-    e3 = spark.range(700).select(
-        ((F.col("id") * 17) % 6000).alias("src"), ((F.col("id") * 31) % 6000).alias("dst")
-    )
-    pairs = e1.union(e2).union(e3)
-    a = {(r["node"], r["comp"]) for r in connected_components(pairs, eager_rounds=True).collect()}
-    b = {(r["node"], r["comp"]) for r in connected_components(pairs, eager_rounds=False).collect()}
-    assert a == b and len(a) > 0
 
 
 def test_substring_candidate_restructure_pairs_unchanged(spark):

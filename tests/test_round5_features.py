@@ -169,21 +169,31 @@ def test_defer_eager_persists_is_thread_local(spark):
         cc_mod.release_scoped_persists()
 
 
-def test_dedup_corpus_overlap_knob_equivalence(spark, monkeypatch):
-    """LIKEN_SPARK_OVERLAP_ROOTS on/off is a physical-plan choice only:
-    identical canonical maps, and the roots broadcast gate fires (small
-    corpus => broadcast side taken) without error in both modes."""
+def test_dedup_corpus_in_memory_vs_checkpointed(spark, tmp_path):
+    """The two sinks of the one north-star stage graph give the same
+    answer: identical canonical partitions from the in-memory
+    ``dedup_corpus`` and the checkpointed run on the same input, the
+    duplicate rows share ``dup0``, and the stored LSH stage holds each
+    undirected edge once."""
     from liken_spark.jobs import dedup_corpus
+    from liken_spark.sources.checkpoint import StageCheckpointer, checkpointed_dedup
 
     rows = [(f"clip{i}", f"some transcript body number {i} padded out for realism",) for i in range(40)]
     rows += [(f"dup{i}", "a repeated transcript shared by several clips in this corpus",) for i in range(6)]
     df = spark.createDataFrame(rows, "clip_id string, transcript string")
 
-    outs = {}
-    for knob in ("1", "0"):
-        monkeypatch.setenv("LIKEN_SPARK_OVERLAP_ROOTS", knob)
-        out = dedup_corpus(df, deterministic_source=False)
-        outs[knob] = {r["clip_id"]: r["canonical_id"] for r in out.collect()}
-    assert outs["1"] == outs["0"]
-    dup_canons = {outs["1"][f"dup{i}"] for i in range(6)}
-    assert dup_canons == {"dup0"}
+    mem = {r["clip_id"]: r["canonical_id"] for r in dedup_corpus(df, deterministic_source=False).collect()}
+    ck = StageCheckpointer(str(tmp_path / "ckpt"), "twin")
+    out = checkpointed_dedup(spark, df, ck)
+    disk = {r["clip_id"]: r["canonical_id"] for r in out.collect()}
+    assert len(mem) == len(disk) == len(rows)
+    # same partition of the clips (canonical values are keep-first ids)
+    assert mem == disk
+    assert {mem[f"dup{i}"] for i in range(6)} == {"dup0"}
+
+    lsh = spark.read.parquet(str(tmp_path / "ckpt" / "twin" / "02_lsh_pairs" / "data"))
+    edges = [(r["src"], r["dst"]) for r in lsh.collect()]
+    assert edges, "the duplicate rows must collide in some LSH band"
+    undirected = {(min(a, b), max(a, b)) for a, b in edges}
+    assert len(undirected) == len(edges)
+    assert all(a != b for a, b in edges)
